@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Waits until the listener bus has delivered every posted event, so the
+  * traced run's counters are complete before they are written out. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

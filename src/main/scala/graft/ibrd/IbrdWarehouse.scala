@@ -4,6 +4,9 @@ import graft.warehouse.{CacheScope, DimDate, FactBuilder, Scd, ScdSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.concurrent.duration.Duration
+import scala.concurrent.{Await, ExecutionContext, Future, blocking}
+
 /** The Kimball star build over staged LoanData (SURVEY.md §1.3/§2.4/§2.5):
   * seven SCD dims (dispositions from the SSIS `ColumnType` table in SURVEY
   * §2.5), a snowflaked country→region dimension (J3), the reference-shaped
@@ -66,27 +69,19 @@ object IbrdWarehouse {
         else element_at(typedLit(holidays), col("StandardDate")))
   }
 
-  // dims are cached on build: every one is read multiple times (fact
-  // lookups + the dangling probe + visuals), and dimension tables are by
-  // definition small relative to the fact — the standard warehouse trade.
-  // The caches register against the caller's scope so a batch loop can
-  // release them once the star is materialized (see CacheScope).
-  private def dimOf(staged: DataFrame, spec: ScdSpec, asOf: String,
-                    scope: CacheScope): DataFrame =
-    scope.persist(Scd.initialLoad(staged.filter(col(spec.bk).isNotNull), spec, asOf, scope))
-
   /** Initial warehouse load from one staged batch.
     *
-    * The staged input is MATERIALIZED once (eager `localCheckpoint`)
-    * before the build fans out: seven dim pipelines, the dangling probe,
-    * and the fact assembly all re-read it, and each would otherwise
-    * carry the entire staging lineage in its plan — at the scaled batch
-    * (q103, 600k rows) per-consumer analysis + whole-stage codegen of
-    * that repeated lineage dominated the build's wall-clock. This is the
-    * warehouse's "land the staging table" step made explicit; a
-    * cluster deployment with executor-loss concerns passes data through
-    * a reliable `checkpoint()` instead (same shape, durable storage). */
-  /** `factPid`: a (column name, bucket count) already carried by
+    * The staged input is LANDED once ([[CacheScope.land]]) before the
+    * build fans out: seven dim pipelines, the dangling probe, and the fact
+    * assembly all re-read it, and each would otherwise carry the entire
+    * staging lineage in its plan — at the scaled batch (q103, 600k rows)
+    * per-consumer analysis + whole-stage codegen of that repeated lineage
+    * dominated the build's wall-clock. This is the warehouse's "land the
+    * staging table" step made explicit; a cluster deployment with
+    * executor-loss concerns passes data through a reliable `checkpoint()`
+    * instead (same shape, durable storage).
+    *
+    * `factPid`: a (column name, bucket count) already carried by
     * `stagedIn` (from [[Clean.stageKeyed]]) — the fact dedup/SK window
     * then reuses the LANDED bucket id and its hash partitioning instead
     * of sampling its own bounds and exchanging the full-width batch a
@@ -94,66 +89,17 @@ object IbrdWarehouse {
   def build(spark: SparkSession, stagedIn: DataFrame, asOf: String = "2024-07-01",
             scope: CacheScope = CacheScope.untracked,
             factPid: Option[(String, Int)] = None): Star = {
-    // The keyed landing must RETAIN its hash partitioning through the
-    // checkpoint: under AQE the checkpoint's LogicalRDD is built while
-    // the adaptive plan still reports Unknown partitioning (measured:
-    // the downstream window then re-exchanges the full batch — exactly
-    // the exchange this path exists to delete), so the landing job runs
-    // with AQE off. One fixed-shape job (fill window + broadcast join);
-    // nothing adaptive to win there, and every later consumer still
-    // runs adaptively. The override is SCOPED to a cloned session
-    // (advisor r10): toggling the session-global conf would race
-    // concurrent builds and silently plan unrelated concurrent queries
-    // with AQE off. The landing plan is re-bound into the clone, the
-    // checkpoint executes under the clone's conf, and the resulting
-    // LogicalRDD (session-free: just an RDD + partitioning) is re-bound
-    // to the caller's session for every downstream consumer.
-    val staged = factPid match {
-      case Some(_) =>
-        import org.apache.spark.sql.graft.Bridge
-        val isolated = Bridge.isolatedSession(spark)
-        isolated.conf.set("spark.sql.adaptive.enabled", "false")
-        val ck = Bridge.ofRows(isolated, stagedIn.queryExecution.logical)
-          .localCheckpoint()
-        Bridge.ofRows(spark, ck.queryExecution.logical)
-      case None => stagedIn.localCheckpoint()
-    }
-    // Construct AND materialize the seven dim pipelines CONCURRENTLY.
-    // Construction is eager, not just declaration: SurrogateKeys' small-
-    // dim fast path decides its plan shape from a count() of the deduped
-    // attrs, so each dimOf runs that full-width distinct over the staged
-    // batch at declaration time — serialized, the seven counts were a
-    // multi-second job tail ahead of a by-then-trivial "concurrent
-    // materialize" block (measured on q103: ~5 s declaring, 0.6 s
-    // materializing). Country chains on region (snowflake: it carries
-    // the region SK resolved from region's current rows — J3,
-    // `country_dimension.dtsx:1264-1287`); the other five are
-    // independent. Spark job submission is thread-safe; dims are
-    // persisted, so every later reader hits the cache.
-    import scala.concurrent.{Await, Future}
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    def loaded(in: DataFrame, spec: graft.warehouse.ScdSpec): Future[DataFrame] =
-      Future { val d = dimOf(in, spec, asOf, scope); d.count(); d }
-    val fRegion = loaded(staged, regionSpec)
-    val fCountry = fRegion.flatMap { dimRegion =>
-      val regionCurrent = dimRegion.filter(col("is_current"))
-        .select(col("region_BK"), col("PK_region_SK"))
-      loaded(staged.join(broadcast(regionCurrent), Seq("region_BK"), "left"),
-        countrySpec.copy(fixed = Seq("PK_region_SK")))
-    }
-    val fOthers = Seq(borrowerSpec, guarantorSpec, statusSpec, typeSpec,
-      projectSpec).map(loaded(staged, _))
-    val all = Await.result(Future.sequence(fRegion +: fCountry +: fOthers),
-      scala.concurrent.duration.Duration.Inf)
-    val Seq(dimRegion, dimCountry, dimBorrower, dimGuarantor,
-      dimStatus, dimType, dimProject) = all
+    val staged = factPid.fold(scope.land(stagedIn))(_ => landKeyed(spark, stagedIn, scope))
+    val Seq(dimRegion, dimCountry, dimBorrower, dimGuarantor, dimStatus, dimType,
+      dimProject) = scdDims(staged, scope)((spec, rows, _) =>
+        Scd.initialLoad(rows, spec, asOf, scope))
     // range covers observed fixture dates plus future snapshots
     // (incremental batches land after the initial load's year)
     val dd = ibrdDimDate(spark, 1990, 2026)
     val dims = Star(dimRegion, dimCountry, dimBorrower, dimGuarantor,
       dimStatus, dimType, dimProject, dd, null)
-    dims.copy(fact = factRows(nonDangling(staged), factLookups(dims), scope, factPid))
+    dims.copy(fact = factRows(nonDangling(staged), staged, factLookups(dims), scope,
+      factPid))
   }
 
   /** Incremental load: merge a new staged batch into every dimension
@@ -168,56 +114,136 @@ object IbrdWarehouse {
     * them between batches — chaining increments over raw lineage compounds
     * the plan until analysis itself becomes the bottleneck.
     *
-    * Cache lifecycle: every per-batch cache (7 merged dims + each merge's
-    * internals) registers against `scope`. The production loop — the
-    * reference's hourly cadence driven via `foreachBatch` — must own a
-    * scope per batch and release it after [[persist]], or storage blocks
-    * grow without bound (StreamingSpec asserts the flat profile). */
+    * The batch runs like [[build]]: `staged` is landed once, and the seven
+    * merged dims are materialized concurrently ([[scdDims]]). The fact's
+    * bucket bounds are sampled from the landed page, so nothing reads the
+    * stored fact before the fact is written.
+    *
+    * Cache lifecycle: the landing, the 7 merged dims and each merge's
+    * internals register against `scope`. The production loop — the
+    * reference's hourly cadence, [[runBatch]] — owns a scope per batch and
+    * releases it after [[persist]] has returned, or storage blocks grow
+    * without bound (StreamingSpec asserts the flat profile). */
   def incremental(star: Star, staged: DataFrame, asOf: String,
                   scope: CacheScope = CacheScope.untracked): Star = {
-    val dimRegion = scope.persist(Scd.merge(star.dimRegion,
-      staged.filter(col("region_BK").isNotNull), regionSpec, asOf, scope))
-    val regionCurrent = dimRegion.filter(col("is_current"))
-      .select(col("region_BK"), col("PK_region_SK"))
-    val dimCountry = scope.persist(Scd.merge(star.dimCountry,
-      staged.filter(col("country_BK").isNotNull)
-        .join(broadcast(regionCurrent), Seq("region_BK"), "left"),
-      countrySpec.copy(fixed = Seq("PK_region_SK")), asOf, scope))
-    def mergeDim(dim: DataFrame, spec: ScdSpec): DataFrame =
-      scope.persist(Scd.merge(dim, staged.filter(col(spec.bk).isNotNull), spec, asOf, scope))
-    val merged = Star(
-      dimRegion, dimCountry,
-      mergeDim(star.dimBorrower, borrowerSpec),
-      mergeDim(star.dimGuarantor, guarantorSpec),
-      mergeDim(star.dimStatus, statusSpec),
-      mergeDim(star.dimType, typeSpec),
-      mergeDim(star.dimProject, projectSpec),
-      star.dimDate, star.fact)
-    val factIn = nonDangling(staged)
+    val landed = scope.land(staged)
+    val Seq(dimRegion, dimCountry, dimBorrower, dimGuarantor, dimStatus, dimType,
+      dimProject) = scdDims(landed, scope)((spec, rows, i) =>
+        Scd.merge(dimsOf(star)(i), rows, spec, asOf, scope))
+    val merged = Star(dimRegion, dimCountry, dimBorrower, dimGuarantor,
+      dimStatus, dimType, dimProject, star.dimDate, star.fact)
+    val factIn = nonDangling(landed)
       .join(star.fact.select(col("loan_number"), col("end_of_period")),
         Seq("loan_number", "end_of_period"), "left_anti")
     val maxSk = star.fact
       .agg(coalesce(max(col("PK_loan_number_SK")), lit(0L)).as("__max"))
-    val appended = factRows(factIn, factLookups(merged), scope)
+    val appended = factRows(factIn, landed, factLookups(merged), scope)
       .crossJoin(broadcast(maxSk))
       .withColumn("PK_loan_number_SK", col("PK_loan_number_SK") + col("__max"))
       .drop("__max")
     merged.copy(fact = star.fact.unionByName(appended))
   }
 
+  /** Land a keyed batch ([[Clean.stageKeyed]]) into `scope`. The keyed
+    * landing must RETAIN its hash partitioning through the checkpoint:
+    * under AQE the checkpoint's LogicalRDD is built while the adaptive
+    * plan still reports Unknown partitioning (measured: the downstream
+    * window then re-exchanges the full batch — exactly the exchange the
+    * keyed path exists to delete), so that landing job runs with AQE off.
+    * One fixed-shape job (fill window + broadcast join); nothing adaptive
+    * to win there, and every later consumer still runs adaptively. The
+    * override is SCOPED to a cloned session (advisor r10): toggling the
+    * session-global conf would race concurrent builds and silently plan
+    * unrelated concurrent queries with AQE off. The landing plan is
+    * re-bound into the clone, the checkpoint executes under the clone's
+    * conf, and the resulting LogicalRDD (session-free: just an RDD +
+    * partitioning) is re-bound to the caller's session for every
+    * downstream consumer. */
+  private def landKeyed(spark: SparkSession, staged: DataFrame,
+                        scope: CacheScope): DataFrame = {
+    import org.apache.spark.sql.graft.Bridge
+    val isolated = Bridge.isolatedSession(spark)
+    isolated.conf.set("spark.sql.adaptive.enabled", "false")
+    val ck = scope.land(Bridge.ofRows(isolated, staged.queryExecution.logical))
+    Bridge.ofRows(spark, ck.queryExecution.logical)
+  }
+
+  private def dimsOf(star: Star): Seq[DataFrame] = Seq(star.dimRegion, star.dimCountry,
+    star.dimBorrower, star.dimGuarantor, star.dimStatus, star.dimType, star.dimProject)
+
+  /** The seven SCD dims of one landed batch, in [[Star]] order, each
+    * built by `scd(spec, rows, index)` from the batch's non-null-BK rows,
+    * persisted into `scope` and MATERIALIZED — all CONCURRENTLY.
+    * Construction is eager, not just declaration: SurrogateKeys' small-
+    * dim fast path decides its plan shape from a count(), so each dim
+    * runs a full-width distinct over the batch while it is declared —
+    * serialized, the seven counts were a multi-second job tail (measured
+    * on q103: ~5 s declaring, 0.6 s materializing; on the hourly batch the
+    * seven merges were a third of the batch). Country chains on region
+    * (snowflake: it carries the region SK resolved from region's current
+    * rows — J3, `country_dimension.dtsx:1264-1287`); the other five are
+    * independent. Dims are persisted, so every later reader hits the
+    * cache. */
+  private def scdDims(landed: DataFrame, scope: CacheScope)(
+      scd: (ScdSpec, DataFrame, Int) => DataFrame): Seq[DataFrame] = {
+    def dim(i: Int, spec: ScdSpec, in: DataFrame): DataFrame = {
+      val d = scope.persist(scd(spec, in.filter(col(spec.bk).isNotNull), i))
+      d.count()
+      d
+    }
+    val regionCountry = () => {
+      val dimRegion = dim(0, regionSpec, landed)
+      val regionCurrent = dimRegion.filter(col("is_current"))
+        .select(col("region_BK"), col("PK_region_SK"))
+      Seq(dimRegion, dim(1, countrySpec.copy(fixed = Seq("PK_region_SK")),
+        landed.join(broadcast(regionCurrent), Seq("region_BK"), "left")))
+    }
+    val others = Seq(borrowerSpec, guarantorSpec, statusSpec, typeSpec, projectSpec)
+      .zipWithIndex.map { case (spec, i) => () => Seq(dim(i + 2, spec, landed)) }
+    concurrently(landed.sparkSession)(regionCountry +: others).flatten
+  }
+
+  /** Runs `tasks` concurrently and returns their results in order — once
+    * EVERY task has finished, rethrowing the first failure (in task
+    * order) unchanged: a caller's `finally` may free caches or delete
+    * storage the moment this returns, so no job of the batch may still be
+    * running. SparkContext local properties are thread-local, and a pool
+    * thread sees those of whichever thread created it, not of the caller,
+    * so each task carries the caller's job group, description, interrupt
+    * flag, scheduler pool and job tags —
+    * `cancelJobGroup`/`cancelJobsWithTag` on a batch reaches every job it
+    * submits, and listeners attribute them to it. Spark job submission is
+    * thread-safe. */
+  private def concurrently[A](spark: SparkSession)(tasks: Seq[() => A]): Seq[A] = {
+    val sc = spark.sparkContext
+    val keys = Seq("spark.jobGroup.id", "spark.job.description",
+      "spark.job.interruptOnCancel", "spark.scheduler.pool", "spark.job.tags")
+    val callers = keys.map(k => k -> sc.getLocalProperty(k))
+    def carried(task: () => A): A = {
+      val own = keys.map(k => k -> sc.getLocalProperty(k))
+      callers.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try blocking(task())
+      finally own.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }
+    val running = tasks.map(t => Future(carried(t))(ExecutionContext.global))
+    running.foreach(Await.ready(_, Duration.Inf))
+    running.map(_.value.get.get)
+  }
+
   private val tableNames = Seq("dim_region", "dim_country", "dim_borrower",
     "dim_guarantor", "dim_status", "dim_type", "dim_project", "dim_date",
     "fact_loan")
 
-  private def starTables(star: Star): Seq[DataFrame] = Seq(
-    star.dimRegion, star.dimCountry, star.dimBorrower, star.dimGuarantor,
-    star.dimStatus, star.dimType, star.dimProject, star.dimDate, star.fact)
+  private def starTables(star: Star): Seq[DataFrame] =
+    dimsOf(star) ++ Seq(star.dimDate, star.fact)
 
-  /** Materialize the star to a [[graft.sources.TableSink]] (overwrite). */
+  /** Materialize the star to a [[graft.sources.TableSink]] (overwrite):
+    * the nine table writes run concurrently, and this returns — or
+    * rethrows the first failure — only once every write has finished. */
   def persist(star: Star, sink: graft.sources.TableSink): Unit =
-    tableNames.zip(starTables(star)).foreach { case (n, df) =>
-      sink.overwrite(df, n)
-    }
+    concurrently(star.fact.sparkSession)(tableNames.zip(starTables(star)).map {
+      case (n, df) => () => sink.overwrite(df, n)
+    })
 
   /** One production batch, end to end: build (first batch) or merge
     * `staged` into the star stored in `prev`, materialize the result to
@@ -285,6 +311,7 @@ object IbrdWarehouse {
   }
 
   private def factRows(factIn: DataFrame,
+                       landed: DataFrame,
                        lookups: Seq[FactBuilder.Lookup],
                        scope: CacheScope,
                        factPid: Option[(String, Int)] = None): DataFrame = {
@@ -296,12 +323,15 @@ object IbrdWarehouse {
     // the SK range pass): bucketing colocates equal keys, so within a
     // bucket one sort by (key, all columns) yields the keep-first flag
     // (key differs from the previous row's) AND the survivor ordinal.
-    // Bucket ids come from DRIVER-PINNED bounds (RangeBuckets): pid is a
-    // pure function of the key, so the per-bucket survivor counts — the
-    // global SK offsets — reduce in a NARROW key-only aggregate straight
-    // off the unmaterialized input (two 16-byte-row shuffles) instead of
-    // forcing a full-width persist as a determinism guard; task retries
-    // agree by construction.
+    // Bucket ids come from DRIVER-PINNED bounds (RangeBuckets), sampled
+    // from the LANDED batch rather than `factIn` (which, incrementally,
+    // anti-joins the stored fact — every sample pass would re-run that
+    // join): any bounds keep the result exact, only bucket balance depends
+    // on them. pid is a pure function of the key, so the per-bucket
+    // survivor counts — the global SK offsets — reduce in a NARROW
+    // key-only aggregate straight off the unmaterialized input (two
+    // 16-byte-row shuffles) instead of forcing a full-width persist as a
+    // determinism guard; task retries agree by construction.
     import org.apache.spark.sql.expressions.Window
     val keyNames = Seq("loan_number", "end_of_period")
     val keys = keyNames.map(col)
@@ -314,8 +344,8 @@ object IbrdWarehouse {
     val (pid, pidX, nBuckets) = factPid match {
       case Some((name, nB)) => (name, col(name), nB)
       case None =>
-        val n = math.max(factIn.rdd.getNumPartitions, 1)
-        val (x, nB) = graft.warehouse.RangeBuckets.pidExpr(factIn, keyNames, n)
+        val n = math.max(landed.rdd.getNumPartitions, 1)
+        val (x, nB) = graft.warehouse.RangeBuckets.pidExpr(landed, keyNames, n)
         ("__f_pid", x, nB)
     }
     val w = Window.partitionBy(col(pid))

@@ -330,19 +330,13 @@ object Ibrd extends QueryPack {
       val root = java.nio.file.Files.createTempDirectory("graft_incr").toString
       val sink1 = new graft.sources.TableSink(s"$root/step1")
       val sink2 = new graft.sources.TableSink(s"$root/step2")
-      // per-step scopes: each step's engine caches are released once its
-      // star is on storage (the batch-loop contract — CacheScope scaladoc)
-      val scope1 = new graft.warehouse.CacheScope
-      val star1 = IbrdWarehouse.build(session, b1, "2023-07-01", scope1)
-      IbrdWarehouse.persist(star1, sink1)
-      scope1.release()
-      val scope2 = new graft.warehouse.CacheScope
-      val star2 = IbrdWarehouse.incremental(
-        IbrdWarehouse.load(session, sink1), b2, "2024-07-01", scope2)
-      IbrdWarehouse.persist(star2, sink2)
-      scope2.release()
-      // the final step is returned lazily to q75/q76 — its caches stay
-      // live for the queries' own materialization (untracked default)
+      // each step's engine caches are released once its star is on
+      // storage (the batch-loop contract)
+      IbrdWarehouse.runBatch(session, None, b1, "2023-07-01", sink1)
+      IbrdWarehouse.runBatch(session, Some(sink1), b2, "2024-07-01", sink2)
+      // the final step's fact is returned lazily to q75/q76 — its landing
+      // and caches stay live for the queries' own materialization
+      // (untracked default)
       IbrdWarehouse.incremental(
         IbrdWarehouse.load(session, sink2), b2, "2025-07-01")
   }

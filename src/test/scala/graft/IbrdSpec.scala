@@ -228,6 +228,129 @@ class IbrdSpec extends SparkSpec {
     assert(star3.dimCountry.count() == stored2.dimCountry.count())
   }
 
+  /** The two fixture snapshots as consecutive hourly batches, the first
+    * already stored as `v1`. */
+  private def storedFirstBatch(): (String, graft.sources.TableSink, org.apache.spark.sql.DataFrame) = {
+    val root = java.nio.file.Files.createTempDirectory("graft_ibrd_batch").toString
+    val v1 = new graft.sources.TableSink(s"$root/v1")
+    IbrdWarehouse.runBatch(spark, None,
+      staged.filter($"end_of_period" === "30-jun-2023"), "2023-07-01", v1)
+    (root, v1, staged.filter($"end_of_period" === "30-jun-2024"))
+  }
+
+  /** Runs `body` with `l` registered; every event its actions posted has
+    * been delivered to `l` when this returns. */
+  private def listening[A](l: org.apache.spark.scheduler.SparkListener)(body: => A): A = {
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try body
+    finally {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("runBatch carries the caller's job group into every job it submits") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.concurrent.{Await, ExecutionContext, Future, blocking}
+    import scala.concurrent.duration._
+    // the dims and the table writes run on pool threads. A pool thread
+    // sees the SparkContext local properties of the thread that CREATED
+    // it (inherited, live), not of the thread that submits to it: fill
+    // the pool from this thread first, then run the batches from a fresh
+    // one, so only explicit carrying can put their jobs in its group —
+    // cancelJobGroup("hourly") must reach every job of the batch
+    val sc = spark.sparkContext
+    staged.count() // the fixture's own cache, outside the group
+    val poolSize = Runtime.getRuntime.availableProcessors
+    val filled = new java.util.concurrent.CountDownLatch(poolSize)
+    (1 to poolSize).map(_ => Future(blocking { filled.countDown(); filled.await() })(
+      ExecutionContext.global)).foreach(Await.ready(_, 1.minute))
+    val root = java.nio.file.Files.createTempDirectory("graft_ibrd_group").toString
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse("<none>"))
+    }
+    @volatile var failure: Option[Throwable] = None
+    val caller = new Thread(() => try {
+      sc.setJobGroup("hourly", "hourly batch")
+      val (v1, v2) = (new graft.sources.TableSink(s"$root/v1"),
+        new graft.sources.TableSink(s"$root/v2"))
+      IbrdWarehouse.runBatch(spark, None,
+        staged.filter($"end_of_period" === "30-jun-2023"), "2023-07-01", v1)
+      IbrdWarehouse.runBatch(spark, Some(v1),
+        staged.filter($"end_of_period" === "30-jun-2024"), "2024-07-01", v2)
+    } catch { case t: Throwable => failure = Some(t) })
+    listening(l) { caller.start(); caller.join() }
+    failure.foreach(throw _)
+    val seen = groups.toArray.toSeq
+    assert(seen.nonEmpty)
+    assert(seen.forall(_ == "hourly"),
+      s"jobs outside the caller's group: ${seen.filterNot(_ == "hourly").size} of ${seen.size}")
+  }
+
+  test("a dangling key fails runBatch with the lookup's message, and no job outlives it") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val (root, v1, batch2) = storedFirstBatch()
+    // a board-approval date outside DimDate's 1990–2026 calendar misses
+    // its lookup: NoMatchBehavior=0 fails the fact write
+    val bad = batch2.withColumn("board_approval_date", lit("01-jan-1980"))
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.put(e.jobId, e.time)
+    }
+    var returned = 0L
+    val err = listening(l) {
+      val e = intercept[Exception] {
+        IbrdWarehouse.runBatch(spark, Some(v1), bad, "2024-07-01",
+          new graft.sources.TableSink(s"$root/v2"))
+      }
+      returned = System.currentTimeMillis()
+      e
+    }
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage)).toSeq
+    assert(messages.exists(m => m.contains("dangling fact keys against dim key(s) Date") &&
+      m.contains("NoMatchBehavior=0")), messages.headOption.getOrElse(""))
+    val jobs = started.toArray.toSeq.map(_.asInstanceOf[Int])
+    assert(jobs.nonEmpty)
+    val running = jobs.filter(j => !ended.containsKey(j) || ended.get(j) > returned)
+    assert(running.isEmpty, s"jobs still running when runBatch returned: $running")
+  }
+
+  test("incremental runBatch: only the fact write itself scans the stored fact") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    // plan-shape guard: the fact's bucket bounds come from the landed
+    // page, so no execution before the write (partition count, bounds
+    // count, bounds sample) re-runs the anti-join over the stored fact
+    val (root, v1, batch2) = storedFirstBatch()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    listening(l) {
+      IbrdWarehouse.runBatch(spark, Some(v1), batch2, "2024-07-01",
+        new graft.sources.TableSink(s"$root/v2"))
+    }
+    val scanLocation = """Location: \w+ \[([^\]]*)\]""".r
+    val factScans = plans.toArray.toSeq.map(_.toString).filter(p =>
+      scanLocation.findAllMatchIn(p).exists(_.group(1).contains(s"$root/v1/fact_loan")))
+    assert(factScans.nonEmpty, "the fact write must read the stored fact")
+    val others = factScans.filterNot(p =>
+      p.contains("InsertIntoHadoopFsRelationCommand") && p.contains(s"$root/v2/fact_loan"))
+    assert(others.isEmpty,
+      s"${others.size} execution(s) besides the fact write scanned the stored fact:\n" +
+        others.map(_.take(600)).mkString("\n---\n"))
+  }
+
   test("dashboard visuals: loans by status sums to fact count; card computes") {
     val byStatus = IbrdMeasures.loansByStatus(star)
     assert(byStatus.agg(sum("Loans")).head.getLong(0) == 146)

@@ -894,6 +894,10 @@ class StreamingSpec extends SparkSpec {
 
     @volatile var current: Option[TableSink] = None
     val rddCounts = scala.collection.mutable.ArrayBuffer[Int]()
+    val storageCounts = scala.collection.mutable.ArrayBuffer[Int]()
+    val landingsLeft = scala.collection.mutable.ArrayBuffer[Int]()
+    val sc = spark.sparkContext
+    val preexisting = sc.getPersistentRDDs.keySet
     val input = MemoryStream[String](spark)
     val q = input.toDS().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[String], id: Long) =>
@@ -904,7 +908,12 @@ class StreamingSpec extends SparkSpec {
           // the one-call production shape: build/merge + persist + release
           IbrdWarehouse.runBatch(spark, current, staged, asOf, vSink)
           current = Some(vSink)
-          rddCounts += spark.sparkContext.getPersistentRDDs.size
+          rddCounts += sc.getPersistentRDDs.size
+          storageCounts += sc.getRDDStorageInfo.length
+          // a landed page is a locally checkpointed RDD: none created by
+          // the batch may still hold blocks once runBatch has released
+          landingsLeft += sc.getPersistentRDDs.count { case (id, rdd) =>
+            !preexisting(id) && rdd.isCheckpointed }
           ()
         }
       }
@@ -920,6 +929,10 @@ class StreamingSpec extends SparkSpec {
     // flat profile: no batch may leave more persisted RDDs than batch 1 did
     assert(rddCounts.forall(_ <= baseline),
       s"storage blocks grew batch-over-batch: $rddCounts")
+    assert(storageCounts.forall(_ <= storageCounts.head),
+      s"cached RDDs grew batch-over-batch: $storageCounts")
+    assert(landingsLeft.forall(_ == 0),
+      s"landed pages outlived their batch's release: $landingsLeft")
     // and the final star is a real warehouse: every staged loan landed
     val fact = IbrdWarehouse.load(spark, current.get).fact
     assert(fact.count() > 0)

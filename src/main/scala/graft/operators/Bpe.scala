@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextOps
-import graft.{Q, QueryPack, Tables => T}
+import graft.{Land, Q, QueryPack, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,10 +32,11 @@ import org.apache.spark.sql.functions._
   *    positions, exactly the even offsets merge ("aaaa" + (a,a) → "aa",
   *    "aa", not three overlapping pairs).
   *
-  * Round state is materialized through [[Rounds]] (localCheckpoint on
-  * local[*]; a reliable checkpoint dir on a cluster) so the composed plan
-  * stays flat across rounds instead of growing until Catalyst analysis
-  * dominates — same discipline as the connected-components contraction.
+  * Round state is materialized through [[graft.Land]] (localCheckpoint on
+  * local[*]; reliable under `spark.checkpoint.dir` on a cluster) so the
+  * composed plan stays flat across rounds instead of growing until
+  * Catalyst analysis dominates — same discipline as the
+  * connected-components contraction.
   */
 object Bpe extends QueryPack {
 
@@ -97,11 +98,8 @@ object Bpe extends QueryPack {
     * pairs. The merge table IS driver-sized by construction (one row
     * per round), so exposing it as a Seq is not a collect smell — it's
     * the tokenizer artifact every encoder ships with. */
-  def trainMergesSeq(docs: DataFrame, rounds: Int,
-                     checkpointDir: Option[String] = None)
+  def trainMergesSeq(docs: DataFrame, rounds: Int)
       : Seq[(Int, String, String, Long)] = {
-    val rc = Rounds(checkpointDir)
-    rc.init(docs)
     // The vocab lands ONCE; each round re-derives the current symbol
     // table INSIDE codegen by replaying the merges learned so far
     // ([[graft.functions.BpeEncode]] — bit-identical to the
@@ -113,7 +111,7 @@ object Bpe extends QueryPack {
     // serial job count of the old materialize-then-window loop, and
     // the replay cost per round is O(learned merges) presence probes
     // per word — flat to 32k merges (ProfileBpe's encode_32k point).
-    val words = rc.mark(wordCounts(docs))
+    val words = Land(wordCounts(docs))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var r = 1
     var exhausted = false
@@ -153,11 +151,10 @@ object Bpe extends QueryPack {
       .agg(sum(col("wcnt")).as("cnt"))
 
   /** Learned merge table as a DataFrame: (rnd, lhs, rhs, merged, cnt). */
-  def trainMerges(docs: DataFrame, rounds: Int,
-                  checkpointDir: Option[String] = None): DataFrame = {
+  def trainMerges(docs: DataFrame, rounds: Int): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    trainMergesSeq(docs, rounds, checkpointDir)
+    trainMergesSeq(docs, rounds)
       .toDF("rnd", "lhs", "rhs", "cnt")
       .select(col("rnd"), col("lhs"), col("rhs"),
         concat(col("lhs"), col("rhs")).as("merged"), col("cnt"))
@@ -212,11 +209,10 @@ object Bpe extends QueryPack {
     * broadcast-merges pass (job count independent of merge count);
     * training remains the per-round loop (it runs ONCE, and q170's
     * batching is its serial-wall mitigation). */
-  def encodeHeldOut(docs: DataFrame, rounds: Int,
-                    checkpointDir: Option[String] = None): DataFrame = {
+  def encodeHeldOut(docs: DataFrame, rounds: Int): DataFrame = {
     val base = docs.filter(pmod(col("doc_id"), lit(Graph.BatchMod.toLong)) =!= 0L)
     val test = docs.filter(pmod(col("doc_id"), lit(Graph.BatchMod.toLong)) === 0L)
-    val merges = trainMergesSeq(base, rounds, checkpointDir)
+    val merges = trainMergesSeq(base, rounds)
     val testWords = test
       .select(explode(TextOps.words(col("text"))).as("w"))
       .distinct()
@@ -228,13 +224,10 @@ object Bpe extends QueryPack {
     * one run-parity DataFrame pass per merge over `words(w)`'s symbol
     * table. N serial vocab-sized jobs — correct, but the wrong shape at
     * production merge counts; never called by catalog entries. */
-  def encodeByFold(words: DataFrame, merges: Seq[(String, String)],
-                   checkpointDir: Option[String] = None): DataFrame = {
-    val rc = Rounds(checkpointDir)
-    rc.init(words)
-    var syms = rc.mark(charSymbols(words.select(col("w"), lit(1L).as("wcnt"))))
+  def encodeByFold(words: DataFrame, merges: Seq[(String, String)]): DataFrame = {
+    var syms = Land(charSymbols(words.select(col("w"), lit(1L).as("wcnt"))))
     merges.foreach { case (lhs, rhs) =>
-      syms = rc.mark(applyMerge(syms, lhs, rhs))
+      syms = Land(applyMerge(syms, lhs, rhs))
     }
     syms.groupBy(col("w"))
       .agg(array_join(
@@ -353,10 +346,9 @@ object Bpe extends QueryPack {
     * hand vocab). Driver-sized by construction: one piece per learned
     * round + an alphabet-sized character collect (guarded by the q149
     * SelectCap discipline — the corpus charset is dictionary-bounded). */
-  def wordpieceVocab(docs: DataFrame, rounds: Int,
-                     checkpointDir: Option[String] = None): Seq[String] = {
+  def wordpieceVocab(docs: DataFrame, rounds: Int): Seq[String] = {
     val base = docs.filter(pmod(col("doc_id"), lit(Graph.BatchMod.toLong)) =!= 0L)
-    val merges = trainMergesSeq(base, rounds, checkpointDir)
+    val merges = trainMergesSeq(base, rounds)
       .map(m => m._2 + m._3)
     val chars = charSymbols(heldOutWords(docs).withColumn("wcnt", lit(1L)))
       .select(col("sym")).distinct().limit(SelectCap + 1)
@@ -381,9 +373,8 @@ object Bpe extends QueryPack {
     * plan's references array, O(|word|·maxPieceLen) hash probes per
     * word), the word→pieces map joins back to occurrences downstream.
     * Output (w, wp): space-joined piece sequence per word. */
-  def wordpieceHeldOut(docs: DataFrame, rounds: Int,
-                       checkpointDir: Option[String] = None): DataFrame = {
-    val vocab = wordpieceVocab(docs, rounds, checkpointDir)
+  def wordpieceHeldOut(docs: DataFrame, rounds: Int): DataFrame = {
+    val vocab = wordpieceVocab(docs, rounds)
     heldOutWords(docs)
       .filter(col("w").isNotNull && col("w") =!= "")
       .select(col("w"),
@@ -446,10 +437,9 @@ object Bpe extends QueryPack {
     * vocab-sized and joins back to the corpus occurrences on `w` — the
     * production shape (tokenize the vocabulary once, never re-encode
     * per occurrence). */
-  def fertilityBySource(docs: DataFrame, rounds: Int,
-                        checkpointDir: Option[String] = None): DataFrame = {
+  def fertilityBySource(docs: DataFrame, rounds: Int): DataFrame = {
     val test = docs.filter(pmod(col("doc_id"), lit(Graph.BatchMod.toLong)) === 0L)
-    val pieces = encodeHeldOut(docs, rounds, checkpointDir)
+    val pieces = encodeHeldOut(docs, rounds)
       .select(col("w"), size(split(col("bpe"), " ")).cast("long").as("np"))
     test.select(col("source"),
         explode(TextOps.words(col("text"))).as("w"))
@@ -583,11 +573,8 @@ object Bpe extends QueryPack {
   /** Batched training loop: per round ONE pair-stats aggregate, one
     * candidate-sized greedy selection, one combined apply+checkpoint.
     * Stops early when no pair remains. */
-  def trainMergesBatchedSeq(docs: DataFrame, rounds: Int, k: Int,
-                            checkpointDir: Option[String] = None)
+  def trainMergesBatchedSeq(docs: DataFrame, rounds: Int, k: Int)
       : Seq[(Int, String, String, Long)] = {
-    val rc = Rounds(checkpointDir)
-    rc.init(docs)
     // same one-landed-vocab + codegen-replay shape as [[trainMergesSeq]]
     // — a round's accumulated merges applied IN LEARNED ORDER are
     // exactly the sequential fold, and within a round the 3-symbol
@@ -595,7 +582,7 @@ object Bpe extends QueryPack {
     // [[applyMergeBatch]] (matches of different batch pairs can never
     // abut — that would need a shared symbol; the oracle's simultaneous
     // LEFT-JOIN replay re-proves it at every scale)
-    val words = rc.mark(wordCounts(docs))
+    val words = Land(wordCounts(docs))
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var r = 1
     var exhausted = false
@@ -612,11 +599,10 @@ object Bpe extends QueryPack {
   }
 
   /** Batched merge table as a DataFrame: (rnd, lhs, rhs, merged, cnt). */
-  def trainMergesBatched(docs: DataFrame, rounds: Int, k: Int,
-                         checkpointDir: Option[String] = None): DataFrame = {
+  def trainMergesBatched(docs: DataFrame, rounds: Int, k: Int): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    trainMergesBatchedSeq(docs, rounds, k, checkpointDir)
+    trainMergesBatchedSeq(docs, rounds, k)
       .toDF("rnd", "lhs", "rhs", "cnt")
       .select(col("rnd"), col("lhs"), col("rhs"),
         concat(col("lhs"), col("rhs")).as("merged"), col("cnt"))

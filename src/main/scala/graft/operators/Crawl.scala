@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.{NGramHash64, TextOps}
 import graft.warehouse.Summary
-import graft.{Q, QueryPack, Tables => T}
+import graft.{Land, Q, QueryPack, Scratch, Tables => T}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType,
@@ -171,14 +171,14 @@ object Crawl extends QueryPack {
     * probed), never exchanged; stale history rows are harmless because
     * a superseded root can never become current again (roots only
     * decrease), so they match no current-root filter and the min-fold
-    * ignores them. Intermediates are eager localCheckpoints — the
+    * ignores them. Intermediates are eager landings ([[graft.Land]]) — the
     * caller must release the RDDs it created after the delta lands
     * (the flat-RDD-profile contract; [[Loop.ingest]] does). */
   def clusterDelta(rawClusters: DataFrame, batchIds: DataFrame,
                    pairs: DataFrame): DataFrame = {
     val endpoints = pairs.select(col("a_id").as("doc_id"))
       .union(pairs.select(col("b_id").as("doc_id"))).distinct()
-    val epRoot = endpointRoots(rawClusters, endpoints).localCheckpoint(true)
+    val epRoot = Land(endpointRoots(rawClusters, endpoints))
     val rootEdges = pairs
       .join(broadcast(epRoot.select(col("doc_id").as("a_id"),
         col("root").as("a_root"))), Seq("a_id"))
@@ -188,9 +188,8 @@ object Crawl extends QueryPack {
       .filter(col("a_id") =!= col("b_id")).distinct()
     val mini = Dedup.componentsFromEdges(
       epRoot.select(col("root").as("doc_id")).distinct(), rootEdges)
-    val relabel = mini.filter(col("cluster_id") < col("doc_id"))
-      .select(col("doc_id").as("old_root"), col("cluster_id").as("new_root"))
-      .localCheckpoint(true)
+    val relabel = Land(mini.filter(col("cluster_id") < col("doc_id"))
+      .select(col("doc_id").as("old_root"), col("cluster_id").as("new_root")))
     val affected = rawClusters
       .join(broadcast(relabel),
         col("cluster_id") === col("old_root"))
@@ -477,9 +476,8 @@ object Crawl extends QueryPack {
     private val fetchesS = new Store(spark, root, "fetches", fetchSchema)
     // the per-host refresh gaps, computed ONCE per loop from the feed
     // (host-dim sized, pinned so every batch sees the same tiers)
-    private lazy val gapsDF: DataFrame = recrawlGaps(hostPriority.getOrElse(
-      sys.error("recrawl gaps need a hostPriority feed (dst_host, s_sum)")))
-      .localCheckpoint()
+    private lazy val gapsDF: DataFrame = Land(recrawlGaps(hostPriority.getOrElse(
+      sys.error("recrawl gaps need a hostPriority feed (dst_host, s_sum)"))))
     private var summary = Summary.summarize(emptyDocs, col("lang"), col("n_chars"))
     private var summaryVersion = -1L
     private var lastCommitted = -1L
@@ -792,7 +790,7 @@ object Crawl extends QueryPack {
       // ---- cluster maintenance ([[clusterDelta]]): batch-proportional
       // appends into the min-fold store. The step's intermediates
       // (endpoint roots, the relabel map, the CC engine's round marks)
-      // are eager localCheckpoints — release them after the delta
+      // are eager landings — release them after the delta
       // lands, or they accumulate in executor storage across batches
       // (the flat-RDD-profile contract the StreamingSpec pin enforces)
       val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
@@ -1135,7 +1133,7 @@ object Crawl extends QueryPack {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val tc = s"q182_canon_$tag"
       val tp = s"q182_prio_$tag"
-      val root = java.nio.file.Files.createTempDirectory("graft_q182").toString
+      val root = Scratch.dir("graft_q182")
       s.sql(s"DROP TABLE IF EXISTS $tc")
       s.sql(s"DROP TABLE IF EXISTS $tp")
       val docs = T.documents(s, d)
@@ -1173,8 +1171,7 @@ object Crawl extends QueryPack {
           val up = if (k == 3) hi else hi * (k + 1) / 4
           docs.filter(col("doc_id") >= lo && col("doc_id") < up)
         }
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_q130").toString
+        val root = Scratch.dir("graft_q130")
         val st = drive(s, batches, codebook, emb, root,
           tag = "q130_" + d.replaceAll("[^A-Za-z0-9]", "_"))
         st.kept
@@ -1272,8 +1269,7 @@ object Crawl extends QueryPack {
           val up = if (k == 3) hi else hi * (k + 1) / 4
           docs.filter(col("doc_id") >= lo && col("doc_id") < up)
         }
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_q145").toString
+        val root = Scratch.dir("graft_q145")
         val loop = driveLoop(s, batches, codebook, emb, root,
           tag = "q145_" + d.replaceAll("[^A-Za-z0-9]", "_"),
           media = batches.map(graft.multimodal.Binary.syntheticAviClips))
@@ -1379,11 +1375,10 @@ object Crawl extends QueryPack {
         // pages synthesized over the FULL corpus, sliced per batch: a
         // page's content (incl. its pagination anchor) is a fact about
         // the page, not about the batch slice — the hostEdges rule
-        val pg = graft.operators.LinkGraph.pages(docs).localCheckpoint()
-        val prio = NgramLm.hostQualityRollup(docs)
-          .select(col("dst_host"), col("s_sum")).localCheckpoint()
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_q179").toString
+        val pg = Land(graft.operators.LinkGraph.pages(docs))
+        val prio = Land(NgramLm.hostQualityRollup(docs)
+          .select(col("dst_host"), col("s_sum")))
+        val root = Scratch.dir("graft_q179")
         val loop = driveLoop(s, quartiles(docs), codebook, emb, root,
           tag = "q179_" + d.replaceAll("[^A-Za-z0-9]", "_"),
           pagesBatches = quartiles(pg), hostPriority = Some(prio))
@@ -1485,15 +1480,14 @@ object Crawl extends QueryPack {
           val up = if (k == 3) hi else hi * (k + 1) / 4
           df.filter(col("doc_id") >= lo && col("doc_id") < up)
         }
-        val pg = graft.operators.LinkGraph.pages(docs).localCheckpoint()
-        val prio = NgramLm.hostQualityRollup(docs)
-          .select(col("dst_host"), col("s_sum")).localCheckpoint()
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_q188").toString
+        val pg = Land(graft.operators.LinkGraph.pages(docs))
+        val prio = Land(NgramLm.hostQualityRollup(docs)
+          .select(col("dst_host"), col("s_sum")))
+        val root = Scratch.dir("graft_q188")
         val loop = driveLoop(s, quartiles(docs), codebook, emb, root,
           tag = "q188_" + d.replaceAll("[^A-Za-z0-9]", "_"),
           pagesBatches = quartiles(pg), hostPriority = Some(prio))
-        val wave = loop.nextFetchWave(4L).localCheckpoint()
+        val wave = Land(loop.nextFetchWave(4L))
         politenessSchedule(wave.select(col("canon_url"), col("dst_host")),
             prio)
           .join(wave.select(col("canon_url"), col("gap"),
@@ -1652,8 +1646,7 @@ object Crawl extends QueryPack {
           val up = if (k == 3) hi else hi * (k + 1) / 4
           docs.filter(col("doc_id") >= lo && col("doc_id") < up)
         }
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_q148").toString
+        val root = Scratch.dir("graft_q148")
         val tag = "q148_" + d.replaceAll("[^A-Za-z0-9]", "_")
         driveLoop(s, batches, codebook, emb, root, tag)
         val at2 = Loop.resume(s, codebook, emb, root, tag,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextOps
-import graft.{Q, QueryPack, Tables => T}
+import graft.{Land, Q, QueryPack, Scratch, Tables => T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -1291,9 +1291,9 @@ object Dedup extends QueryPack {
     * an edge iterate — singletons (the overwhelming majority of a real
     * corpus) join back once at the end with their own id. Per-round
     * results are persisted and materialized so a task retry replays from
-    * the cached previous round, not the whole chain. Pass `checkpointDir`
-    * on a cluster: rounds then write through reliable `checkpoint()` and
-    * survive executor loss (see [[Rounds]]). */
+    * the cached previous round, not the whole chain. On a cluster with
+    * `spark.checkpoint.dir` set, rounds write through reliable
+    * `checkpoint()` and survive executor loss (see [[graft.Land]]). */
   /** Session-scoped memo of the near-dup cluster mapping: q62 (the
     * cleaned-corpus rewrite) and q79 (the analytics view) consume the
     * SAME `clusterIds(documents, 0.8)` pipeline — its pair generation +
@@ -1303,7 +1303,7 @@ object Dedup extends QueryPack {
     * row per doc — ~16 bytes/doc, corpus-linear, never corpus²), so it
     * is persisted and eagerly materialized once per (session, dir,
     * threshold); the second consumer reads the cached rows (and after a
-    * cache flush, re-derives them from the pipeline's localCheckpoint
+    * cache flush, re-derives them from the pipeline's landed
     * roots — cheap, the pair generation never re-runs). WEAK session
     * keys + SOFT values, same as the q75/q76 star memo: a stopped
     * session must not stay pinned by this cache, and the value must be
@@ -1332,10 +1332,9 @@ object Dedup extends QueryPack {
   }
 
   def clusterIds(docs: DataFrame, threshold: Double,
-                 maxIters: Int = 50,
-                 checkpointDir: Option[String] = None): DataFrame =
+                 maxIters: Int = 50): DataFrame =
     componentsFromEdges(docs.select(col("doc_id")),
-      jaccardPairs(docs, threshold), maxIters, checkpointDir)
+      jaccardPairs(docs, threshold), maxIters)
 
   /** Connected components over an arbitrary undirected pair set —
     * factored out of [[clusterIds]] so ANY near-dup pair source can be
@@ -1345,10 +1344,7 @@ object Dedup extends QueryPack {
     * `pairs` carries (a_id, b_id). Output: (doc_id, cluster_id) with
     * cluster_id = the component's minimum id. */
   def componentsFromEdges(ids: DataFrame, pairsIn: DataFrame,
-                          maxIters: Int = 50,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    val rounds = Rounds(checkpointDir)
-    rounds.init(ids)
+                          maxIters: Int = 50): DataFrame = {
     // checkpoint the PAIRS, not the symmetrized edge union: union's two
     // branches are separate plan subtrees, so checkpointing downstream of
     // the union ran the whole pair-generation pipeline twice (the
@@ -1356,13 +1352,13 @@ object Dedup extends QueryPack {
     // (AQE already right-sizes the tiny CC shuffles — an explicit
     // count+repartition of the pair graph was measured SLOWER at sf0.1:
     // the extra jobs cost more than the narrow-task savings)
-    val pairs = rounds.mark(pairsIn.select(col("a_id"), col("b_id")))
+    val pairs = Land(pairsIn.select(col("a_id"), col("b_id")))
     val edges = pairs.union(pairs.select(col("b_id"), col("a_id")))
       .toDF("src", "dst")
     // hook step (union-find "hook to min neighbor"): every edge node maps
     // to min(self, min neighbor). Near-dup clusters are near-cliques, so
     // this one aggregate collapses almost the whole graph immediately.
-    var mapping = rounds.mark(edges.groupBy(col("src"))
+    var mapping = Land(edges.groupBy(col("src"))
       .agg(min(col("dst")).as("mn"))
       .select(col("src").as("id"), least(col("src"), col("mn")).as("lbl")))
     // contract: rewrite edges between current labels, drop intra-label
@@ -1373,9 +1369,9 @@ object Dedup extends QueryPack {
     // nothing. Per-round state is checkpointed — composing mappings
     // through joins otherwise compounds the logical plan (the pointer-
     // doubling formulation this replaces OOM'd an 8 GiB driver on plan
-    // growth alone). With `checkpointDir` set these tiny per-round tables
-    // land on reliable storage and survive executor loss.
-    def contract(e: DataFrame, m: DataFrame): DataFrame = rounds.mark(e
+    // growth alone). Under a Spark checkpoint dir these tiny per-round
+    // tables land on reliable storage and survive executor loss.
+    def contract(e: DataFrame, m: DataFrame): DataFrame = Land(e
       .join(m.select(col("id").as("src"), col("lbl").as("slbl")), Seq("src"), "left")
       .join(m.select(col("id").as("dst"), col("lbl").as("dlbl")), Seq("dst"), "left")
       .select(coalesce(col("slbl"), col("src")).as("src"),
@@ -1391,7 +1387,7 @@ object Dedup extends QueryPack {
         .agg(min(col("dst")).as("mn"))
         .select(col("src").as("lbl"), least(col("src"), col("mn")).as("nlbl"))
       // compose into the node mapping (nodes whose label didn't move keep it)
-      mapping = rounds.mark(mapping.join(step, Seq("lbl"), "left")
+      mapping = Land(mapping.join(step, Seq("lbl"), "left")
         .select(col("id"), coalesce(col("nlbl"), col("lbl")).as("lbl")))
       ce = contract(ce, step.select(col("lbl").as("id"), col("nlbl").as("lbl")))
       remaining = ce.count()
@@ -1446,16 +1442,15 @@ object Dedup extends QueryPack {
     * rewrite so the oracle pins every row). */
   def componentsIncremental(mapping: DataFrame, newPairsIn: DataFrame,
                             batchIds: DataFrame): DataFrame = {
-    val rounds = Rounds(None)
     // the pair pipeline (the operator's dominant cost) feeds endpoint
     // extraction AND both translation joins — land it once
-    val newPairs = rounds.mark(newPairsIn.select(col("a_id"), col("b_id")))
+    val newPairs = Land(newPairsIn.select(col("a_id"), col("b_id")))
     val endpoints = newPairs.select(col("a_id").as("doc_id"))
       .union(newPairs.select(col("b_id").as("doc_id"))).distinct()
     // endpoint → old root: batch docs are absent from the mapping and
     // root to themselves. Endpoint side is batch-proportional; the
     // mapping side scans (bucketed store) or at worst shuffles once.
-    val epRoot = rounds.mark(endpoints
+    val epRoot = Land(endpoints
       .join(mapping, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("root")))
@@ -1690,7 +1685,7 @@ object Dedup extends QueryPack {
       // in-memory (dies with the JVM), so a managed location under the
       // persistent ./spark-warehouse would orphan on exit and block the
       // next JVM's overwrite
-      val root = java.nio.file.Files.createTempDirectory("graft_q126").toString
+      val root = Scratch.dir("graft_q126")
       s.sql(s"DROP TABLE IF EXISTS $regT")
       s.sql(s"DROP TABLE IF EXISTS $setsT")
       val docs = T.documents(s, d)
@@ -1717,7 +1712,7 @@ object Dedup extends QueryPack {
     q135Built.computeIfAbsent(d, _ => {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val mapT = s"q135_mapping_$tag"
-      val root = java.nio.file.Files.createTempDirectory("graft_q135").toString
+      val root = Scratch.dir("graft_q135")
       s.sql(s"DROP TABLE IF EXISTS $mapT")
       graft.sources.TableSink.writeBucketed(
         clusterIds(T.documents(s, d).filter(col("doc_id") % 97 =!= 0), 0.8),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack, Tables => T}
+import graft.{Land, Q, QueryPack, Scratch, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   * a real 10^11-edge graph writes edges ONCE bucketed by `src` so the join
   * never exchanges the edge side (the q80 bucketed-join layout;
   * GraphSpec pins the rank-side-only exchange on that variant) and
-  * truncates lineage with `localCheckpoint` every few rounds exactly as
+  * truncates lineage with [[graft.Land]] every few rounds exactly as
   * the crawl loop does (Crawl.scala). Overflow headroom: the BINDING
   * term is edge DERIVATION, not rank mass — `node·A` (A ≈ 2.65e9)
   * overflows signed 64-bit at node ≈ Long.Max/A ≈ 3.4e9 nodes, where
@@ -186,7 +186,7 @@ object Graph extends QueryPack {
     q157Built.computeIfAbsent(d, _ => {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val t = s"q157_ranks_$tag"
-      val root = java.nio.file.Files.createTempDirectory("graft_q157").toString
+      val root = Scratch.dir("graft_q157")
       s.sql(s"DROP TABLE IF EXISTS $t")
       val docs = T.documents(s, d)
       val (nodes, edgesAll) = linkGraph(s, docs)
@@ -258,7 +258,7 @@ object Graph extends QueryPack {
     // distinct + degree joins per consumer — at a 10^11-edge scale this
     // is "orient once, persist", the same write-once layout the
     // bucketed-edge PageRank variant pins in GraphSpec
-    val dir = orientByDegree(und).localCheckpoint()
+    val dir = Land(orientByDegree(und))
     val tri = orientedWedges(dir).alias("w")
       .join(dir.alias("e3"),
         col("w.x") === col("e3.u") && col("w.z") === col("e3.v"), "left_semi")
@@ -303,19 +303,17 @@ object Graph extends QueryPack {
     // (each pair join re-ran the whole walk prefix); landed, each step
     // is one tiny node-dim table (one row per start) and every
     // consumer reads it directly. Same discipline as q130/q78.
-    val edges = edgesRaw.localCheckpoint()
-    val w0 = nodes.select(col("node").as("start"), col("node"))
-      .localCheckpoint()
+    val edges = Land(edgesRaw)
+    val w0 = Land(nodes.select(col("node").as("start"), col("node")))
     // the SAME edges plan joins every step: qualify through string
     // aliases so each round's dst resolves to the fresh copy, not the
     // attribute already embedded in the frontier's lineage
     (1 to WalkLen).scanLeft(w0) { (w, p) =>
-      w.alias("w").join(edges.alias("e"),
+      Land(w.alias("w").join(edges.alias("e"),
         col("w.node") === col("e.src") &&
           col("e.j") === pmod((col("w.start") + lit(1L)) * lit(B1) +
             lit((p - 1).toLong * B2), lit(OutDegree.toLong)))
-        .select(col("w.start").as("start"), col("e.dst").as("node"))
-        .localCheckpoint()
+        .select(col("w.start").as("start"), col("e.dst").as("node")))
     }
   }
 
@@ -416,7 +414,7 @@ object Graph extends QueryPack {
     * re-shuffles (pre-bucketed by src at production scale, the q153
     * layout). */
   def kcoreSurvivors(s: SparkSession, dir: String): DataFrame =
-    kcorePeel(tradeEdges(s, dir).localCheckpoint(), CoreRounds, CoreK)
+    kcorePeel(Land(tradeEdges(s, dir)), CoreRounds, CoreK)
 
   /** The peel loop of [[kcoreSurvivors]], factored over an arbitrary
     * SYMMETRIZED (src, dst) edge table. Exposed for hand-graph
@@ -428,8 +426,8 @@ object Graph extends QueryPack {
       .groupBy(col("src")).agg(count(lit(1)).as("d"))
     var alive = e.select(col("src").as("node")).distinct()
     for (_ <- 1 to rounds)
-      alive = degrees(alive).filter(col("d") >= k)
-        .select(col("src").as("node")).localCheckpoint()
+      alive = Land(degrees(alive).filter(col("d") >= k)
+        .select(col("src").as("node")))
     degrees(alive).select(col("src").as("node"), col("d"))
   }
 
@@ -460,7 +458,7 @@ object Graph extends QueryPack {
     * contract (cheapest path using ≤ R edges) is exactly what an
     * unrollable oracle needs. */
   def weightedReach(s: SparkSession, dir: String): DataFrame = {
-    val e = tradeEdgesWeighted(s, dir).localCheckpoint()
+    val e = Land(tradeEdgesWeighted(s, dir))
     val nodes = e.select(col("src").as("node")).distinct()
     val d0 = nodes.select(col("node"),
       when(pmod(col("node"), lit(200L)) === 0L, lit(0L)).as("cost"))
@@ -478,7 +476,7 @@ object Graph extends QueryPack {
             .when(col("nc").isNull, col("cost"))
             .when(col("nc") < col("cost"), col("nc"))
             .otherwise(col("cost")).as("cost"))
-      if (i % 2 == 0 && i < BfsRounds) next.localCheckpoint() else next
+      if (i % 2 == 0 && i < BfsRounds) Land(next) else next
     }
     dN.filter(col("cost").isNotNull)
   }
@@ -515,10 +513,9 @@ object Graph extends QueryPack {
     * (cap or degree-orient the pivot side). One self-join shuffle on
     * the supplier key + one pair aggregate. */
   def commonNeighborPairs(s: SparkSession, dir: String): DataFrame = {
-    val cs = tradeEdges(s, dir)
+    val cs = Land(tradeEdges(s, dir)
       .filter(pmod(col("src"), lit(2L)) === 0L) // customer→supplier rows
-      .select(col("src").as("cust"), col("dst").as("supp"))
-      .localCheckpoint()
+      .select(col("src").as("cust"), col("dst").as("supp")))
     cs.alias("x").join(cs.alias("y"),
         col("x.supp") === col("y.supp") && col("x.cust") < col("y.cust"))
       .groupBy(col("x.cust").as("a"), col("y.cust").as("b"))
@@ -592,7 +589,7 @@ object Graph extends QueryPack {
     * simple form is kept and the wavefront form noted. Returns
     * (node, dist) for REACHED nodes only. */
   def bfsReach(s: SparkSession, dir: String): DataFrame = {
-    val e = tradeEdges(s, dir).localCheckpoint()
+    val e = Land(tradeEdges(s, dir))
     // symmetrized: every node appears as a src
     val nodes = e.select(col("src").as("node")).distinct()
     val d0 = nodes.select(col("node"),
@@ -624,7 +621,7 @@ object Graph extends QueryPack {
             .when(col("nd").isNull, col("dist"))
             .when(col("nd") < col("dist"), col("nd"))
             .otherwise(col("dist")).as("dist"))
-      if (i % 2 == 0 && i < rounds) next.localCheckpoint() else next
+      if (i % 2 == 0 && i < rounds) Land(next) else next
     }
 
   /** Generated BFS relaxation rounds — the SQL twin of [[bfsReach]]'s
@@ -663,8 +660,8 @@ object Graph extends QueryPack {
     * of [[BfsRounds]] from scratch. Nodes the batch introduces enter at
     * the seed rule (0 if seed, unreached otherwise). */
   def bfsReachIncremental(s: SparkSession, dir: String): DataFrame = {
-    val eBase = tradeEdges(s, dir,
-      pmod(col("o_orderkey"), lit(BatchMod.toLong)) =!= 0L).localCheckpoint()
+    val eBase = Land(tradeEdges(s, dir,
+      pmod(col("o_orderkey"), lit(BatchMod.toLong)) =!= 0L))
     val baseNodes = eBase.select(col("src").as("node")).distinct()
     val b0 = baseNodes.select(col("node"),
       when(pmod(col("node"), lit(200L)) === 0L, lit(0L)).as("dist"))
@@ -677,7 +674,7 @@ object Graph extends QueryPack {
     * rule, [[IncrRounds]] relaxations. */
   private def bfsIncrementalFrom(s: SparkSession, dir: String,
                                  stored: DataFrame): DataFrame = {
-    val eAll = tradeEdges(s, dir).localCheckpoint()
+    val eAll = Land(tradeEdges(s, dir))
     val allNodes = eAll.select(col("src").as("node")).distinct()
     val warm = allNodes.join(stored.withColumnRenamed("dist", "bdist"),
         Seq("node"), "left")
@@ -698,10 +695,10 @@ object Graph extends QueryPack {
     q171Built.computeIfAbsent(d, _ => {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val t = s"q171_dists_$tag"
-      val root = java.nio.file.Files.createTempDirectory("graft_q171").toString
+      val root = Scratch.dir("graft_q171")
       s.sql(s"DROP TABLE IF EXISTS $t")
-      val eBase = tradeEdges(s, d,
-        pmod(col("o_orderkey"), lit(BatchMod.toLong)) =!= 0L).localCheckpoint()
+      val eBase = Land(tradeEdges(s, d,
+        pmod(col("o_orderkey"), lit(BatchMod.toLong)) =!= 0L))
       val baseNodes = eBase.select(col("src").as("node")).distinct()
       val b0 = baseNodes.select(col("node"),
         when(pmod(col("node"), lit(200L)) === 0L, lit(0L)).as("dist"))
@@ -729,9 +726,9 @@ object Graph extends QueryPack {
   val PprRounds = 3
 
   def pprTrade(s: SparkSession, dir: String): DataFrame = {
-    val e = tradeEdges(s, dir).localCheckpoint()
+    val e = Land(tradeEdges(s, dir))
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    val ed = e.join(deg, "src").localCheckpoint()
+    val ed = Land(e.join(deg, "src"))
     val nodes = e.select(col("src").as("node")).distinct()
     val seed = pmod(col("node"), lit(200L)) === 0L
     val r0 = nodes.select(col("node"),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.ibrd.{Clean, Fixture, FixtureFiles, IbrdMeasures, IbrdWarehouse, Model}
-import graft.{Q, QueryPack}
+import graft.{Q, QueryPack, Scratch}
 import org.apache.spark.sql.functions.col
 
 /** End-to-end IBRD pipeline entries: fixture page → clean → star build →
@@ -327,7 +327,7 @@ object Ibrd extends QueryPack {
       val staged = Clean.stage(Fixture.raw(session)).cache()
       val b1 = staged.filter(col("end_of_period") === "30-jun-2023")
       val b2 = staged.filter(col("end_of_period") === "30-jun-2024")
-      val root = java.nio.file.Files.createTempDirectory("graft_incr").toString
+      val root = Scratch.dir("graft_incr")
       val sink1 = new graft.sources.TableSink(s"$root/step1")
       val sink2 = new graft.sources.TableSink(s"$root/step2")
       // each step's engine caches are released once its star is on
@@ -537,8 +537,7 @@ object Ibrd extends QueryPack {
         val staged = Clean.stage(Fixture.raw(s)).cache()
         val scope = new graft.warehouse.CacheScope
         val built = IbrdWarehouse.build(s, staged, scope = scope)
-        val sink = new graft.sources.TableSink(java.nio.file.Files
-          .createTempDirectory("graft_star_serve").toString)
+        val sink = new graft.sources.TableSink(Scratch.dir("graft_star_serve"))
         IbrdWarehouse.persist(built, sink)
         scope.release()
         staged.unpersist()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack, Tables => T}
+import graft.{Land, Q, QueryPack, Scratch, Tables => T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -210,7 +210,7 @@ object LinkGraph extends QueryPack {
     // the index is consumed three times (positives, the negative
     // draw's id join, the false-negative anti-join) — land it once
     // rather than re-running the corpus-sized harvest per consumer
-    val ai = anchorContext(pages).localCheckpoint()
+    val ai = Land(anchorContext(pages))
     val hosts = graft.warehouse.SurrogateKeys.assign(
       ai.select(col("dst_host")).distinct(), Seq("dst_host"), "hid",
       offset = -1L)
@@ -273,8 +273,7 @@ object LinkGraph extends QueryPack {
     * would re-run the regexp extraction per round (at scale: the
     * orient-once-persist discipline of the q158 edge table). */
   private def withOutDeg(edges: DataFrame): DataFrame =
-    edges.join(edges.groupBy(col("src")).agg(count(lit(1)).as("od")), "src")
-      .localCheckpoint()
+    Land(edges.join(edges.groupBy(col("src")).agg(count(lit(1)).as("od")), "src"))
 
   private def hostNodes(edges: DataFrame): DataFrame =
     edges.select(col("src").as("node"))
@@ -335,7 +334,7 @@ object LinkGraph extends QueryPack {
     q187Built.computeIfAbsent(d, _ => {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val t = s"q187_actx_$tag"
-      val root = java.nio.file.Files.createTempDirectory("graft_q187").toString
+      val root = Scratch.dir("graft_q187")
       s.sql(s"DROP TABLE IF EXISTS $t")
       graft.sources.TableSink.writeBucketed(
         anchorContextRaw(pages(T.documents(s, d)))
@@ -355,7 +354,7 @@ object LinkGraph extends QueryPack {
     q161Built.computeIfAbsent(d, _ => {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val t = s"q161_ranks_$tag"
-      val root = java.nio.file.Files.createTempDirectory("graft_q161").toString
+      val root = Scratch.dir("graft_q161")
       s.sql(s"DROP TABLE IF EXISTS $t")
       val docs = T.documents(s, d)
       val nodes = hostNodes(withOutDeg(hostEdges(docs)))
@@ -389,16 +388,13 @@ object LinkGraph extends QueryPack {
     * pipeline's automated analogue — hosts whose inbound quality mass
     * beats the mean). One broadcast scalar row; the rollup is the only
     * shuffle. */
-  def trustSeeds(docs: DataFrame,
-                 checkpointDir: Option[String] = None): DataFrame = {
+  def trustSeeds(docs: DataFrame): DataFrame = {
     // the host-dim rollup feeds both the gate scalar and the seed
     // filter; their different column prunings make the subtrees
     // non-identical, so without landing it the whole LM-scoring rollup
     // (tokenize + five count-table joins + host agg) executes twice —
     // landed once, it is a dictionary-sized (host, s_sum) vector
-    val rounds = Rounds(checkpointDir)
-    rounds.init(docs)
-    val roll = rounds.mark(NgramLm.hostQualityRollup(docs)
+    val roll = Land(NgramLm.hostQualityRollup(docs)
       .select(col("dst_host"), col("s_sum")))
     val tot = roll.agg(sum(col("s_sum")).as("tot"), count(lit(1)).as("nh"))
     roll.crossJoin(broadcast(tot))
@@ -440,11 +436,11 @@ object LinkGraph extends QueryPack {
     * table so no per-round re-derivation of the gate. */
   def trustrankHosts(spark: SparkSession, docs: DataFrame): DataFrame = {
     val e = withOutDeg(hostEdges(docs))
-    val nodes = hostNodes(e)
+    // consumed by every round + the final output
+    val nodes = Land(hostNodes(e)
       .join(trustSeeds(docs).select(col("dst_host").as("node"),
         lit(1L).as("seed")), Seq("node"), "left")
-      .select(col("node"), coalesce(col("seed"), lit(0L)).as("seed"))
-      .localCheckpoint() // consumed by every round + the final output
+      .select(col("node"), coalesce(col("seed"), lit(0L)).as("seed")))
     val t0 = nodes.select(col("node"), col("seed"),
       (col("seed") * lit(Graph.Scale)).as("t"))
     (1 to Graph.Iterations).foldLeft(t0)((t, _) => stepTrust(nodes, e, t))
@@ -477,11 +473,10 @@ object LinkGraph extends QueryPack {
     val r0 = plain.select(col("node"), lit(Graph.Scale).as("r"))
     val pr = (1 to Graph.Iterations)
       .foldLeft(r0)((r, _) => stepVarDeg(plain, e, r))
-    val sn = plain
+    val sn = Land(plain
       .join(trustSeeds(docs).select(col("dst_host").as("node"),
         lit(1L).as("seed")), Seq("node"), "left")
-      .select(col("node"), coalesce(col("seed"), lit(0L)).as("seed"))
-      .localCheckpoint()
+      .select(col("node"), coalesce(col("seed"), lit(0L)).as("seed")))
     val t0 = sn.select(col("node"), col("seed"),
       (col("seed") * lit(Graph.Scale)).as("t"))
     val tr = (1 to Graph.Iterations).foldLeft(t0)((t, _) => stepTrust(sn, e, t))
@@ -536,9 +531,9 @@ object LinkGraph extends QueryPack {
     * bridge edge. */
   def lpaCommunities(spark: SparkSession, docs: DataFrame): DataFrame = {
     val e = hostEdges(docs)
-    val sym = e.unionByName(e.select(col("dst").as("src"),
+    val sym = Land(e.unionByName(e.select(col("dst").as("src"),
         col("src").as("dst")))
-      .distinct().localCheckpoint()
+      .distinct())
     val nodes = hostNodes(sym)
     lpaLoop(sym, nodes.select(col("node"), col("node").as("label")),
       LpaRounds)
@@ -566,7 +561,7 @@ object LinkGraph extends QueryPack {
       val next = lab.join(pick, lab("node") === pick("dst"), "left")
         .select(lab("node"),
           coalesce(col("vote"), lab("label")).as("label"))
-      if (i % 2 == 0 && i < rounds) next.localCheckpoint() else next
+      if (i % 2 == 0 && i < rounds) Land(next) else next
     }
 
   /** RFC 3986 §6.2.2 percent-encoding normalization, pure expressions:
@@ -797,7 +792,7 @@ object LinkGraph extends QueryPack {
     * map-side-combined group-by — the q153 static-edges/moving-vector
     * split. */
   def hitsHosts(spark: SparkSession, docs: DataFrame): DataFrame =
-    hitsLoop(hostEdges(docs).localCheckpoint(), HitsRounds, HitsShift)
+    hitsLoop(Land(hostEdges(docs)), HitsRounds, HitsShift)
 
   /** The shifted HITS loop of [[hitsHosts]], factored over an arbitrary
     * (src, dst) edge table — exposed for the spec's shift-invariance
@@ -901,7 +896,7 @@ object LinkGraph extends QueryPack {
     * q166 ([[Graph.bfsLoop]] — string node keys, same static-edges/
     * moving-vector shape); reached (node, dist) vector oracled. */
   def bfsHosts(spark: SparkSession, docs: DataFrame): DataFrame = {
-    val e = hostEdges(docs).localCheckpoint()
+    val e = Land(hostEdges(docs))
     val nodes = hostNodes(e)
     val seed = e.agg(min(col("src")).as("seed"))
     val d0 = nodes.crossJoin(broadcast(seed))
@@ -927,8 +922,8 @@ object LinkGraph extends QueryPack {
   private def symOf(docs: DataFrame,
                     srcDocPred: Column = lit(true)): DataFrame = {
     val e = hostEdges(docs, srcDocPred)
-    e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint()
+    Land(e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct())
   }
 
   /** The base phase of [[lpaCommunitiesIncremental]]: labels converged
@@ -967,7 +962,7 @@ object LinkGraph extends QueryPack {
     q177Built.computeIfAbsent(d, _ => {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val t = s"q177_labels_$tag"
-      val root = java.nio.file.Files.createTempDirectory("graft_q177").toString
+      val root = Scratch.dir("graft_q177")
       s.sql(s"DROP TABLE IF EXISTS $t")
       graft.sources.TableSink.writeBucketed(baseLabels(T.documents(s, d)),
         t, 32, Seq("node"), path = Some(s"$root/$t"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.TextOps
 import graft.multimodal.Binary
-import graft.{Q, QueryPack, Tables => T}
+import graft.{Land, Q, QueryPack, Scratch, Tables => T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -35,15 +35,12 @@ object Multimodal extends QueryPack {
     * bucket approaches the default cap at the catalog's corpus sizes. */
   def videoNearDup(assets: org.apache.spark.sql.DataFrame,
                    threshold: Double,
-                   maxBucket: Int = 100000,
-                   checkpointDir: Option[String] = None): org.apache.spark.sql.DataFrame = {
-    val rounds = Rounds(checkpointDir)
-    rounds.init(assets)
+                   maxBucket: Int = 100000): org.apache.spark.sql.DataFrame = {
     // landed once: the distinct print set feeds the per-asset counts
     // AND the bucket-member pass, whose differing column prunings make
     // the subtrees non-identical — without the landing the REAL decode
     // of every frame executes once per consumer (the r16 gate lesson)
-    val prints = rounds.mark(Binary.decodeFrameSums(assets)
+    val prints = Land(Binary.decodeFrameSums(assets)
       .select(col("asset_id"), struct(col("width"), col("height"),
         col("sum_r"), col("sum_g"), col("sum_b")).as("print"))
       .distinct())
@@ -86,14 +83,11 @@ object Multimodal extends QueryPack {
     * all share aHash 0 and would otherwise square in every band). */
   def imageNearDup(assets: org.apache.spark.sql.DataFrame,
                    maxHamming: Int,
-                   maxBucket: Int = 100000,
-                   checkpointDir: Option[String] = None): org.apache.spark.sql.DataFrame = {
-    val rounds = Rounds(checkpointDir)
-    rounds.init(assets)
+                   maxBucket: Int = 100000): org.apache.spark.sql.DataFrame = {
     // landed once: consumed by the banding pass and BOTH confirm-join
     // sides — without the landing the real image decode runs three
     // times (the r16 gate lesson)
-    val hashes = rounds.mark(Binary.imageAHash(assets))
+    val hashes = Land(Binary.imageAHash(assets))
     val mask = lit(0xffffL)
     val bands = hashes.select(col("asset_id"), explode(array(
         struct(lit(0).as("bi"), shiftright(col("hash_hi"), 16).bitwiseAND(mask).as("bv")),
@@ -134,12 +128,9 @@ object Multimodal extends QueryPack {
     * black frame — one hot fingerprint must not square). */
   def audioNearDup(assets: org.apache.spark.sql.DataFrame,
                    threshold: Double,
-                   maxBucket: Int = 100000,
-                   checkpointDir: Option[String] = None): org.apache.spark.sql.DataFrame = {
-    val rounds = Rounds(checkpointDir)
-    rounds.init(assets)
+                   maxBucket: Int = 100000): org.apache.spark.sql.DataFrame = {
     // landed once — same three-consumer shape as videoNearDup's prints
-    val prints = rounds.mark(Binary.audioWindowPrints(assets)
+    val prints = Land(Binary.audioWindowPrints(assets)
       .select(col("asset_id"), struct(col("s1"), col("s2")).as("print"))
       .distinct())
     val counts = prints.groupBy(col("asset_id")).agg(count(lit(1)).as("n"))
@@ -497,8 +488,7 @@ object Multimodal extends QueryPack {
     // produce the identical result over the same underlying bytes. ----
     "q146_video_seek_byref" -> Q(
       (s, d) => {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft_q146_pack").toString
+        val dir = Scratch.dir("graft_q146_pack")
         Binary.videoFrameSampleStatsByRef(
           Binary.writeAssetRefs(
             Binary.syntheticAviAssets(T.documents(s, d)), dir),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextOps
-import graft.{Q, QueryPack, Tables => T}
+import graft.{Land, Q, QueryPack, Scratch, Tables => T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -423,17 +423,14 @@ object NgramLm extends QueryPack {
     * actual configuration (Wenzek et al. run KenLM, which is interpolated
     * modified KN): same exact-integer mean gate (s_milli·n_docs ≥ Σ), so
     * the kept set stays bit-stable; only the smoothing changed. */
-  def knQualityGate(docs: DataFrame,
-                    checkpointDir: Option[String] = None): DataFrame = {
+  def knQualityGate(docs: DataFrame): DataFrame = {
     // land the doc-dim score vector ONCE: it feeds both the gate scalar
     // and the kept-set filter, whose different column prunings make the
     // two subtrees non-identical — without the landing the whole
     // KN-scoring chain (tokenize + seven count-table joins) executes
     // twice (the r15 moving-vector lesson; measured 3.75 s → the cost
     // of one scoring pass + the gate)
-    val rounds = Rounds(checkpointDir)
-    rounds.init(docs)
-    val scored = rounds.mark(knDocScoresMilli(docs))
+    val scored = Land(knDocScoresMilli(docs))
     val tot = scored.agg(sum(col("s_milli")).as("tot"),
       count(lit(1)).as("nd"))
     scored.crossJoin(broadcast(tot))
@@ -455,14 +452,11 @@ object NgramLm extends QueryPack {
     * broadcast back; the scored set streams map-only past it. The only
     * addition over q168 is the lang column ride-along and the groupBy
     * swap — the LM lookup joins upstream still dominate. */
-  def langQualityGate(docs: DataFrame,
-                      checkpointDir: Option[String] = None): DataFrame = {
+  def langQualityGate(docs: DataFrame): DataFrame = {
     // landed once: consumed by the per-lang totals AND the kept-set
     // filter (see knQualityGate — differing column pruning defeats
     // exchange reuse and would re-run the scoring chain)
-    val rounds = Rounds(checkpointDir)
-    rounds.init(docs)
-    val scored = rounds.mark(docScoresMilli(docs)
+    val scored = Land(docScoresMilli(docs)
       .join(docs.select(col("doc_id"), col("lang")), "doc_id"))
     val tot = scored.groupBy(col("lang"))
       .agg(sum(col("s_milli")).as("tot"), count(lit(1)).as("nd"))
@@ -513,7 +507,7 @@ object NgramLm extends QueryPack {
     q184Built.computeIfAbsent(d, _ => {
       val tag = d.replaceAll("[^A-Za-z0-9]", "_")
       val t = s"q184_gen_$tag"
-      val root = java.nio.file.Files.createTempDirectory("graft_q184").toString
+      val root = Scratch.dir("graft_q184")
       s.sql(s"DROP TABLE IF EXISTS $t")
       graft.sources.TableSink.writeBucketed(
         docScoresMilli(T.documents(s, d))
@@ -530,13 +524,10 @@ object NgramLm extends QueryPack {
     * aggregate broadcast against the scored set, no second shuffle. At
     * 100 TB the scored set streams map-only past the broadcast row;
     * the LM lookup joins upstream are the only shuffles. */
-  def lmQualityGate(docs: DataFrame,
-                    checkpointDir: Option[String] = None): DataFrame = {
+  def lmQualityGate(docs: DataFrame): DataFrame = {
     // landed once — same two-consumer shape as knQualityGate: without
     // it the whole stupid-backoff scoring chain runs twice
-    val rounds = Rounds(checkpointDir)
-    rounds.init(docs)
-    val scored = rounds.mark(docScoresMilli(docs))
+    val scored = Land(docScoresMilli(docs))
     val tot = scored.agg(sum(col("s_milli")).as("tot"),
       count(lit(1)).as("nd"))
     scored.crossJoin(broadcast(tot))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorOps
-import graft.{Q, QueryPack, Tables => T}
+import graft.{Land, Q, QueryPack, Scratch, Tables => T}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -295,16 +295,13 @@ object Similarity extends QueryPack {
     * unchanged — same codebook-broadcast shape); outputs are exact
     * integers end-to-end, ties break on neighbor id. */
   def pqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-             shortlist: Int = PqShortlist,
-             checkpointDir: Option[String] = None): DataFrame = {
+             shortlist: Int = PqShortlist): DataFrame = {
     // the query-table relation feeds TWO differently-pruned broadcast
     // builds (qtab → ADC scan, q6v → refine) whose subtrees are planned
     // separately — land the |queries|-row vector once instead of running
     // the codebook-aggregate chain per consumer (the r16 gate rule:
     // duplicated chains with no shared exchange at the divergence point)
-    val rounds = Rounds(checkpointDir)
-    rounds.init(queries)
-    val qt = rounds.mark(pqQueryTables(queries, corpus))
+    val qt = Land(pqQueryTables(queries, corpus))
     val scored = pqCodes(corpus)
       .crossJoin(broadcast(qt.select(col("query_id"), col("qtab"))))
       .filter(col("query_id") =!= col("vec_id"))
@@ -398,11 +395,9 @@ object Similarity extends QueryPack {
     * shortlist dial; both published beside their entries. */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                 nCells: Int = IvfCentroids, nProbe: Int = IvfProbes,
-                shortlist: Int = PqShortlist,
-                checkpointDir: Option[String] = None): DataFrame =
+                shortlist: Int = PqShortlist): DataFrame =
     ivfPqSearch(ivfPqIndex(corpus, nCells), queries, corpus, k,
-      nCells, nProbe, shortlist, pruneStored = false,
-      checkpointDir = checkpointDir)
+      nCells, nProbe, shortlist, pruneStored = false)
 
   /** The IVF-PQ coded index: (vec_id, cell, codes) — nearest coarse cell
     * AND PqM 4-bit codes in ONE fused projection per corpus row against
@@ -465,8 +460,7 @@ object Similarity extends QueryPack {
   def ivfPqSearch(indexed: DataFrame, queries: DataFrame, corpus: DataFrame,
                   k: Int, nCells: Int = IvfCentroids,
                   nProbe: Int = IvfProbes, shortlist: Int = PqShortlist,
-                  pruneStored: Boolean = false,
-                  checkpointDir: Option[String] = None): DataFrame = {
+                  pruneStored: Boolean = false): DataFrame = {
     val cb = codebookRow(ivfPqCoarse(corpus, nCells))
     val qprobes = queries
       .select(col("vec_id").as("query_id"),
@@ -476,9 +470,7 @@ object Similarity extends QueryPack {
       .select(col("query_id"),
         probeCells(col("v"), col("vn"), col("__cb"), nProbe).as("probes"))
     // landed once for the same two-consumer reason as [[pqTopK]]
-    val rounds = Rounds(checkpointDir)
-    rounds.init(queries)
-    val qt = rounds.mark(pqQueryTables(queries, corpus))
+    val qt = Land(pqQueryTables(queries, corpus))
     val qcells = qt.select(col("query_id"), col("qtab"))
       .join(qprobes, "query_id")
       .select(col("query_id"), col("qtab"),
@@ -613,17 +605,13 @@ object Similarity extends QueryPack {
     * no exchange — [[nearestCell]]), posexplode → one (cell, dim) hash
     * aggregate — the corpus never amplifies or shuffles for assignment,
     * and the only iterated state is the
-    * codebook itself (checkpointed per round; 16 rows — pass
-    * `checkpointDir` on a cluster for executor-loss-durable rounds,
-    * [[Rounds]]). Dimension sums run
+    * codebook itself (landed per round; 16 rows — executor-loss-durable
+    * under a Spark checkpoint dir, [[graft.Land]]). Dimension sums run
     * through DECIMAL on round(6) inputs, so centroids are bit-identical
     * across engines and partitionings (the Dashboard.dsum rule) — which is
     * what makes the unrolled-SQL oracle for q78 possible. Cells that lose
     * every member keep their previous centroid. */
-  def trainCodebook(corpus: DataFrame, nCentroids: Int, iters: Int,
-                    checkpointDir: Option[String] = None): DataFrame = {
-    val rounds = Rounds(checkpointDir)
-    rounds.init(corpus)
+  def trainCodebook(corpus: DataFrame, nCentroids: Int, iters: Int): DataFrame = {
     val c = corpus.select(col("vec_id").as("nid"),
       transform(col("embedding"), _.cast("double")).as("cv"))
       .withColumn("cn", VectorOps.norm(col("cv")))
@@ -646,7 +634,7 @@ object Similarity extends QueryPack {
         .groupBy(col("cell"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("cm")))),
           _.getField("cm")).as("newv"))
-      cents = rounds.mark(cents
+      cents = Land(cents
         .join(means.withColumnRenamed("cell", "cent_id"), Seq("cent_id"), "left")
         .select(col("cent_id"), coalesce(col("newv"), col("centv")).as("centv")))
     }
@@ -712,7 +700,7 @@ object Similarity extends QueryPack {
                         cutoff: Long): String =
     q132Built.computeIfAbsent(d, _ => {
       val t = s"q132_registry_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-      val root = java.nio.file.Files.createTempDirectory("graft_q132").toString
+      val root = Scratch.dir("graft_q132")
       s.sql(s"DROP TABLE IF EXISTS $t")
       graft.sources.TableSink.writeBucketed(
         signBucketRegistry(T.embeddings(s, d)
@@ -730,7 +718,7 @@ object Similarity extends QueryPack {
   private def q138Store(s: org.apache.spark.sql.SparkSession,
                         d: String): String =
     q138Built.computeIfAbsent(d, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q138").toString
+      val root = Scratch.dir("graft_q138")
       ivfPqIndex(T.embeddings(s, d))
         .write.partitionBy("cell").mode("overwrite")
         .parquet(s"$root/index")
@@ -752,7 +740,7 @@ object Similarity extends QueryPack {
   private def q140Store(s: org.apache.spark.sql.SparkSession,
                         d: String): String =
     q140Built.computeIfAbsent(d, _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q140").toString
+      val root = Scratch.dir("graft_q140")
       val emb = T.embeddings(s, d)
       // bounded scalar: one max() row fixes the deterministic 75% split
       val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)

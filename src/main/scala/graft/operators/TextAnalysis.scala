@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextOps
-import graft.{Q, QueryPack, Tables => T}
+import graft.{Q, QueryPack, Scratch, Tables => T}
 import org.apache.spark.sql.functions._
 
 /** Text analysis over the `documents` table (builder-prompt training-data
@@ -801,7 +801,7 @@ object TextAnalysis extends QueryPack {
                         cutoff: Long): (String, String) =
     q133Built.computeIfAbsent(d, _ => {
       val t = s"q133_index_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-      val root = java.nio.file.Files.createTempDirectory("graft_q133").toString
+      val root = Scratch.dir("graft_q133")
       s.sql(s"DROP TABLE IF EXISTS $t")
       val prefix = bm25PerDoc(
         T.documents(s, d).filter(col("doc_id") < cutoff), Bm25Query)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.warehouse.{DimDate, FactBuilder, Merge, Scd, ScdSpec, Summary}
-import graft.{Q, QueryPack, Tables => T}
+import graft.{Q, QueryPack, Scratch, Tables => T}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -398,7 +398,7 @@ object Warehouse extends QueryPack {
       val tag = f"${dir.hashCode & 0xffffffffL}%08x"
       val ltab = s"graft_lineitem_b_$tag"
       val otab = s"graft_orders_b_$tag"
-      val root = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
+      val root = Scratch.dir("graft_bucketed")
       graft.sources.TableSink.writeBucketed(
         T.lineitem(session, dir).select(col("l_orderkey"), col("l_extendedprice")),
         ltab, 8, Seq("l_orderkey"), Some(s"$root/lineitem"))

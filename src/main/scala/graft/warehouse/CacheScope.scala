@@ -1,5 +1,6 @@
 package graft.warehouse
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
@@ -10,13 +11,15 @@ import org.apache.spark.sql.execution.LogicalRDD
   * several plan branches ([[Scd.merge]], [[SurrogateKeys.assign]],
   * [[Ffill.forwardFill]], the per-dim caches in
   * [[graft.ibrd.IbrdWarehouse]]), and land the staged batch once
-  * ([[land]]). In a one-shot query those caches die with the session; in
-  * the reference's production shape — an hourly batch/streaming loop
-  * (`pyspark_dag2.py:447-448`) — they would accumulate storage blocks
-  * batch-over-batch forever. A `CacheScope` makes ownership explicit: the
-  * engine registers every internal persist and landing against the scope
-  * the caller passed, and the caller releases the scope once the batch's
-  * output is materialized (e.g. after
+  * ([[land]], through [[graft.Land]]: executor storage by default, files
+  * under Spark's checkpoint dir when one is set). In a one-shot query
+  * those caches die with the session; in the reference's production
+  * shape — an hourly batch/streaming loop (`pyspark_dag2.py:447-448`) —
+  * they would accumulate storage blocks (and, on the reliable tier,
+  * checkpoint files) batch-over-batch forever. A `CacheScope` makes
+  * ownership explicit: the engine registers every internal persist and
+  * landing against the scope the caller passed, and the caller releases
+  * the scope once the batch's output is materialized (e.g. after
   * [[graft.ibrd.IbrdWarehouse.persist]], which returns only once every
   * table write has finished).
   *
@@ -47,10 +50,10 @@ final class CacheScope private (track: Boolean) {
     df.persist()
   }
 
-  /** Land `df`: an eager `localCheckpoint` (materialized once, lineage
-    * truncated), its blocks registered for [[release]]. */
+  /** Land `df` ([[graft.Land]]: materialized once, lineage truncated),
+    * its blocks or checkpoint files registered for [[release]]. */
   def land(df: DataFrame): DataFrame = {
-    val landed = df.localCheckpoint()
+    val landed = graft.Land(df)
     if (track) landed.queryExecution.logical match {
       case l: LogicalRDD => synchronized { landings += l.rdd }
       case _ =>
@@ -60,10 +63,17 @@ final class CacheScope private (track: Boolean) {
 
   /** Unpersist every tracked DataFrame and landing (non-blocking: the
     * catalog entry is dropped synchronously; block deletion proceeds in
-    * the background). */
+    * the background), and delete the checkpoint files of every reliable
+    * landing (synchronously). */
   def release(): Unit = synchronized {
     tracked.foreach(_.unpersist(blocking = false))
-    landings.foreach(_.unpersist(blocking = false))
+    landings.foreach { rdd =>
+      rdd.unpersist(blocking = false)
+      rdd.getCheckpointFile.foreach { f =>
+        val p = new Path(f)
+        p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
+      }
+    }
     tracked.clear()
     landings.clear()
   }

@@ -291,6 +291,54 @@ class IbrdSpec extends SparkSpec {
       s"jobs outside the caller's group: ${seen.filterNot(_ == "hourly").size} of ${seen.size}")
   }
 
+  test("runBatch on the reliable tier builds the same star and leaves no checkpoint file behind") {
+    import org.apache.spark.CheckpointDirs
+    import graft.warehouse.CacheScope
+    import scala.jdk.CollectionConverters._
+    // under a Spark checkpoint dir every batch lands its staged page there;
+    // release must delete those files, or an hourly loop grows the dir
+    // without bound
+    val root = java.nio.file.Files.createTempDirectory("graft_ibrd_rel").toString
+    val ckDir = s"$root/checkpoints"
+    def filesUnder(p: String): Seq[String] = {
+      val r = java.nio.file.Paths.get(p)
+      if (!java.nio.file.Files.exists(r)) Nil
+      else {
+        val all = java.nio.file.Files.walk(r)
+        try all.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map(_.toString).toList
+        finally all.close()
+      }
+    }
+    val nBatches = 5
+    def hourly(tier: String): Seq[Seq[String]] = {
+      var prev = Option.empty[graft.sources.TableSink]
+      (0 until nBatches).foreach { k =>
+        val next = new graft.sources.TableSink(s"$root/$tier/v$k")
+        IbrdWarehouse.runBatch(spark, prev,
+          staged.filter(pmod(abs(hash($"loan_number")), lit(nBatches)) === k),
+          f"2023-${k + 1}%02d-01", next)
+        prev = Some(next)
+        if (tier == "reliable") assert(filesUnder(ckDir).isEmpty,
+          s"batch $k left checkpoint files: ${filesUnder(ckDir).take(5)}")
+      }
+      IbrdWarehouse.load(spark, prev.get).productIterator.toSeq.collect {
+        case t: org.apache.spark.sql.Dataset[_] => t.collect().map(_.toString).toSeq.sorted
+      }
+    }
+    val reliable = CheckpointDirs.withDir(spark.sparkContext, ckDir) {
+      // the landing really takes the reliable tier, and release removes it
+      val probe = new CacheScope
+      probe.land(staged).count()
+      assert(filesUnder(ckDir).nonEmpty, "a landing must write to the checkpoint dir")
+      probe.release()
+      assert(filesUnder(ckDir).isEmpty)
+      hourly("reliable")
+    }
+    val local = hourly("local")
+    assert(reliable == local)
+    assert(local.last.nonEmpty, "the fact must hold the ingested loans")
+  }
+
   test("a dangling key fails runBatch with the lookup's message, and no job outlives it") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
     val (root, v1, batch2) = storedFirstBatch()

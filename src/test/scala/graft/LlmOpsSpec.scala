@@ -594,13 +594,16 @@ class LlmOpsSpec extends SparkSpec {
 
   test("iterative operators write reliable checkpoints when a dir is given") {
     // at cluster scale localCheckpoint blocks die with a lost executor;
-    // checkpointDir routes every round through reliable checkpoint().
-    // Results must be identical to the default path, and checkpoint files
-    // must actually land in the dir.
+    // Spark's checkpoint dir routes every landing through reliable
+    // checkpoint(). Results must be identical to the default path, and
+    // checkpoint files must actually land in the dir.
+    import org.apache.spark.CheckpointDirs
+    val sc = spark.sparkContext
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_rel").toString
     val docs = Tables.documents(spark, sf)
-    val withCk = Dedup.clusterIds(docs, 0.8, checkpointDir = Some(s"$dir/cc"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val withCk = CheckpointDirs.withDir(sc, s"$dir/cc") {
+      Dedup.clusterIds(docs, 0.8).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     val default = Dedup.clusterIds(docs, 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(withCk == default)
@@ -612,12 +615,22 @@ class LlmOpsSpec extends SparkSpec {
     assert(filesUnder(s"$dir/cc") > 0, "CC rounds must land in the reliable dir")
 
     val emb = Tables.embeddings(spark, sf).limit(400)
-    val trained = Similarity.trainCodebook(emb, 8, 2, checkpointDir = Some(s"$dir/lloyd"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toMap
+    val trained = CheckpointDirs.withDir(sc, s"$dir/lloyd") {
+      Similarity.trainCodebook(emb, 8, 2)
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toMap
+    }
     val trainedDefault = Similarity.trainCodebook(emb, 8, 2)
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toMap
     assert(trained == trainedDefault)
     assert(filesUnder(s"$dir/lloyd") > 0, "Lloyd rounds must land in the reliable dir")
+
+    // an operator that lands its shared edge table and every other
+    // frontier directly (no per-operator option ever reached it)
+    def reach(): Set[(Long, Long)] = graft.operators.Graph.bfsReach(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val reachCk = CheckpointDirs.withDir(sc, s"$dir/bfs")(reach())
+    assert(reachCk == reach())
+    assert(filesUnder(s"$dir/bfs") > 0, "BFS landings must land in the reliable dir")
   }
 
   test("minhash verify joins the corpus sets by shuffle, never broadcast") {

@@ -32,10 +32,21 @@ class EntrySpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
   test("every query runs at sf0.001 and catalog names are unique") {
+    // catalog drives that store state (registries, indexes, crawl logs)
+    // must keep it under Scratch's per-JVM root, the only graft_* entry
+    // the pass may add to the temp dir
+    spark.conf.get("spark.sql.warehouse.dir") // the session's own dir predates the snapshot
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftEntries: Set[String] =
+      Option(tmp.list()).toSet.flatten.filter(_.startsWith("graft_"))
+    val before = graftEntries
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, sf).count()
       withClue(name) { assert(n >= 0) }
     }
+    val added = graftEntries -- before
+    assert(added.size <= 1 && added.forall(_.startsWith("graft_scratch_")),
+      s"catalog drives left temp dirs outside the scratch root: $added")
   }
   test("no catalog query's executed plan contains an unpartitioned window") {
     // a window with an empty partition spec collapses the stage to one
